@@ -34,10 +34,6 @@ Scale design (10^10 events / 100 TB):
   per commit;
 * readers resolve state ONLY through manifests (never directory listing),
   so commits are atomic and concurrent readers see consistent snapshots.
-
-When an Iceberg runtime jar is on the classpath, ``sinks/iceberg.py``
-provides the same interface over real ``MERGE INTO`` (not available in this
-sandbox — no network; SURVEY.md §7).
 """
 
 from __future__ import annotations
@@ -95,8 +91,15 @@ class ConstraintViolationError(ValueError):
 
 class ManifestConflict(RuntimeError):
     """Another writer committed this manifest version first (optimistic
-    concurrency loss).  ``merge`` catches it and rebases; see
-    ``ManifestTable.merge`` retries."""
+    concurrency loss).  What a verb does when it loses the race:
+
+    * rebase and retry — ``merge``, ``commit_delta_files``,
+      ``retention_delete`` rebuild their commit on the winner's head and
+      raise this only once their attempts run out;
+    * return ``Skipped`` — ``compact``, ``rebucket`` and the DDL verbs
+      (maintenance re-runs later and never contends with ingest);
+    * raise — ``rollback_to``, ``fast_forward`` (re-check the state and
+      retry deliberately)."""
 
 
 def _bucket_expr(n_buckets: int, bucket_col: str = "conv_id"):
@@ -126,6 +129,18 @@ def _epoch_applied(m: dict[str, Any], epoch_key: str) -> bool:
     scope, eid = parsed
     r = (m.get("applied_ranges") or {}).get(scope)
     return bool(r) and r[0] <= eid <= r[1]
+
+
+def _skipped_epoch(m: dict[str, Any], epoch_id, reason: str, t0: float) -> dict:
+    """An ingest verb's result for an epoch the ledger of ``m`` already
+    holds (exactly-once: nothing to commit)."""
+    return {
+        "status": "Skipped",
+        "epoch_id": epoch_id,
+        "version": m["version"],
+        "reason": reason,
+        "duration_s": time.monotonic() - t0,
+    }
 
 
 def _fold_applied(
@@ -388,8 +403,6 @@ class ManifestTable:
         # default is the POSIX backend, and the object-store fake is proven
         # equivalent by the parameterized concurrency/chaos/vacuum suites
         self.storage = storage or LocalFSStorage(root)
-        self._manifest: dict[str, Any] | None = None
-        self._last_read: dict[str, Any] | None = None  # newest manifest GET
         from collections import OrderedDict
 
         # content-hash-keyed manifest-segment LRU (see _get_segments)
@@ -952,27 +965,20 @@ class ManifestTable:
         if v is None:
             raise FileNotFoundError(f"no manifest at {self.root}")
         try:
-            m = self._get_manifest(self._manifest_key(v))
+            return self._get_manifest(self._manifest_key(v))
         except FileNotFoundError:
             if head and self.branch is None:
                 # a hinted head whose manifest is gone (tampered hints /
                 # partial restore): recompute from the full listing once
                 versions = self._list_versions()
                 if versions and versions[-1] != v:
-                    m = self._get_manifest(self._manifest_key(versions[-1]))
-                    self._last_read = m
-                    return m
+                    return self._get_manifest(self._manifest_key(versions[-1]))
             if self.branch is None:
                 raise
             # pre-fork snapshots live on the main chain: a branch is seeded
             # with a copy of its fork-base manifest only, so time travel /
             # chain walks below the fork fall through to the main namespace
             return self._get_manifest(f"{_MANIFEST_DIR}/v{v:012d}.json")
-        if head:
-            # remember the newest head read: _carry_sticky_meta's zero-GET
-            # fast path (every verb reads the head right before assembling)
-            self._last_read = m
-        return m
 
     def _publish(self, manifest: dict[str, Any]) -> None:
         """Atomic publish: a conditional PUT of the version key — the
@@ -980,8 +986,17 @@ class ManifestTable:
         EEXIST = lost race; object store: ``If-None-Match: *`` PUT).
         Readers can never observe a partial manifest; the PUT IS the commit
         point (SURVEY.md §7 hard parts).  Raises ``ManifestConflict`` on a
-        lost race — ``merge`` rebases and retries."""
-        self._carry_sticky_meta(manifest)
+        lost race; what each verb then does is listed there.  A shallow
+        clone's ``external_sizes`` is pruned to the files this commit
+        still references."""
+        ext = manifest.get("external_sizes")
+        if ext:
+            live = self._rel_files(manifest)
+            kept = {p: sz for p, sz in ext.items() if p in live}
+            if kept:
+                manifest["external_sizes"] = kept
+            else:
+                del manifest["external_sizes"]
         key = self._manifest_key(manifest["version"])
         stored = self._externalize(manifest)
         if not self.storage.put_if_absent(key, self._encode_manifest(stored)):
@@ -989,63 +1004,91 @@ class ManifestTable:
                 f"manifest v{manifest['version']} was committed by a "
                 f"concurrent writer"
             )
-        self._manifest = manifest
         self._write_head_hint(manifest["version"])
 
-    def _carry_sticky_meta(self, manifest: dict[str, Any]) -> None:
-        """Carry commit-invariant bookkeeping through every publish, so
-        the manifest-assembly sites need no awareness of it: shallow-clone
-        provenance (``cloned_from`` + ``external_sizes`` of
-        still-referenced source files, set at a clone's v0) and TABLE
-        PROPERTIES (``properties``, settable mid-chain, survive rollback
-        like Iceberg's — properties are table config, not snapshot
-        state).  Zero extra metadata reads in the non-race path: every
-        verb reads the head manifest right before assembling, and that
-        read is remembered in ``_last_read``; only a publish whose parent
-        is neither the last head read nor this handle's own last publish
-        (i.e. a lost-and-rebased race) pays one GET."""
-        if manifest.get("parent") is None:
-            return
-        need_clone = "cloned_from" not in manifest
-        need_props = "properties" not in manifest
-        # the retention watermark (retention_delete) is table config like
-        # properties: carried through every commit, surviving rollback —
-        # the "never holds pre-cutoff rows again" contract is not snapshot
-        # state.  (Monotonicity across a rollback to a version carrying an
-        # OLDER watermark is enforced in rollback_to itself.)
-        need_ret = "retention_ts" not in manifest
-        if not (need_clone or need_props or need_ret):
-            return
-        parent = None
-        for c in (self._last_read, self._manifest):
-            if c is not None and c.get("version") == manifest["parent"]:
-                parent = c
-                break
-        if parent is None:
+    # what a commit records about itself alone (the retention drop set):
+    # a child built from its parent never inherits these
+    _COMMIT_ONLY_KEYS = ("retdel_dropped", "retdel_rows")
+    # table CONFIG, not snapshot state: every commit carries it from its
+    # parent, and rollback_to keeps the head's (properties like Iceberg's;
+    # the retention watermark is monotone, so the head holds the newest)
+    _TABLE_CONFIG_KEYS = ("properties", "retention_ts", "cloned_from")
+
+    @classmethod
+    def _next(
+        cls, parent: dict[str, Any], epoch_id: str, /, **changed
+    ) -> dict[str, Any]:
+        """The commit built on ``parent``: every parent key carries —
+        table config included, by construction — except the commit-only
+        ones; ``changed`` overrides."""
+        return {
+            **{k: v for k, v in parent.items() if k not in cls._COMMIT_ONLY_KEYS},
+            "version": parent["version"] + 1,
+            "parent": parent["version"],
+            "epoch_id": epoch_id,
+            "added_cols": [],
+            "committed_at": time.time(),
+            **changed,
+        }
+
+    def _transact(
+        self, build, base=None, retries: int = 1, before_publish=None
+    ) -> dict[str, Any]:
+        """The one commit path of every verb after ``create``/``clone``:
+        read the head (``base`` on the first attempt, when the verb already
+        holds it), ``build(head)`` the next manifest, run the
+        ``before_publish`` hook (test/chaos: after staging, before the
+        commit point), then ``_publish``.  A lost race re-reads the head
+        and calls ``build`` again on the winner's manifest, up to
+        ``retries`` attempts, then raises ``ManifestConflict``.  ``build``
+        may instead return a finished result — a dict with ``status``
+        (already applied, nothing to change, redone elsewhere) — which is
+        returned as is, with nothing published.  Returns the published
+        manifest or that result."""
+        for attempt in range(max(1, retries)):
+            head = self.manifest() if attempt or base is None else base
+            new = build(head)
+            if "status" in new:
+                return new
+            if before_publish is not None:
+                before_publish(new)
             try:
-                parent = self.manifest(manifest["parent"])
-            except FileNotFoundError:
-                return
-        if need_props and parent.get("properties"):
-            manifest["properties"] = parent["properties"]
-        if need_ret and parent.get("retention_ts") is not None:
-            manifest["retention_ts"] = parent["retention_ts"]
-        if need_clone and parent.get("cloned_from"):
-            manifest["cloned_from"] = parent["cloned_from"]
-            ext = parent.get("external_sizes") or {}
-            if ext:
-                live = {
-                    p
-                    for d in (
-                        manifest["files"],
-                        manifest.get("delta_files") or {},
-                    )
-                    for ps in d.values()
-                    for p in ps
-                }
-                kept = {p: sz for p, sz in ext.items() if p in live}
-                if kept:
-                    manifest["external_sizes"] = kept
+                self._publish(new)
+                return new
+            except ManifestConflict:
+                continue
+        raise ManifestConflict(
+            f"commit {new['epoch_id']}: lost the manifest race {retries} "
+            f"time(s) — giving up (nothing published; staged files remain "
+            f"unreferenced; safe to retry)"
+        )
+
+    def _commit_or_skip(
+        self,
+        m: dict[str, Any],
+        epoch_id: str,
+        changed: dict[str, Any],
+        before_publish=None,
+        **result,
+    ) -> dict[str, Any]:
+        """Commit ``changed`` on ``m``, the head the verb read, in ONE
+        attempt — the maintenance and DDL verbs: losing the race to a
+        concurrent writer returns Skipped (the verb re-runs later; it
+        never blocks or retries against ingest).  A commit returns Success
+        with its version plus ``result``."""
+        try:
+            new = self._transact(
+                lambda head: self._next(head, epoch_id, **changed),
+                base=m,
+                before_publish=before_publish,
+            )
+        except ManifestConflict:
+            return {
+                "status": "Skipped",
+                "reason": "lost manifest race to a concurrent writer",
+                "version": self.current_version(),
+            }
+        return {"status": "Success", "version": new["version"], **result}
 
     # ---------- schema ----------
 
@@ -1826,7 +1869,7 @@ class ManifestTable:
         (exactly-once under streaming re-delivery / restart).
 
         Concurrency (``retries``): the manifest commit is an optimistic
-        put-if-absent (``_publish``).  On a lost race the merge re-reads the
+        put-if-absent (``_transact``).  On a lost race the merge re-reads the
         winner's manifest and rebases: a duplicate epoch is skipped
         (exactly-once across writers); a delta commit rebases by re-appending
         its staged files; a CoW commit rebases only if the winner's commit
@@ -1844,13 +1887,7 @@ class ManifestTable:
         # per-checkpoint, cross-restart
         epoch_key = f"{epoch_scope}:{epoch_id}"
         if _epoch_applied(m, epoch_key):
-            return {
-                "status": "Skipped",
-                "epoch_id": epoch_id,
-                "version": m["version"],
-                "reason": "epoch already committed",
-                "duration_s": time.monotonic() - t0,
-            }
+            return _skipped_epoch(m, epoch_id, "epoch already committed", t0)
         n_buckets = m["n_buckets"]
         key_cols = m["key_cols"]
         cur_schema = self.schema()
@@ -1879,7 +1916,7 @@ class ManifestTable:
         payload_fields = [
             f for f in changes.schema.fields if f.name not in ("op", "lsn")
         ]
-        new_schema, added_cols = self._evolve_schema(
+        new_schema, _ = self._evolve_schema(
             cur_schema,
             T.StructType(payload_fields),
             tombstoned=self._tombstoned_names(m),
@@ -2099,164 +2136,37 @@ class ManifestTable:
                     f"audit failed: duplicate keys staged for epoch {epoch_id}"
                 )
 
-        # ---- publish (optimistic concurrency: assemble against a base
-        # manifest; on a lost race, rebase onto the winner and retry)
-        def _assemble(mc: dict[str, Any]) -> dict[str, Any]:
-            """Build the commit manifest on top of base manifest ``mc``
-            (first attempt: the manifest the merge read; rebase attempts:
-            the concurrent winner's).  Schema evolution is re-derived
-            against ``mc`` — a concurrent writer may have added columns;
-            additive union + read-through-nulls make both sides' files
-            readable under the merged schema."""
-            base_schema = T.StructType.fromJson(mc["schema"])
-            schema_c, added_c = self._evolve_schema(
-                base_schema,
-                T.StructType(payload_fields),
-                tombstoned=self._tombstoned_names(mc),
-            )
-            oldf = {int(b): ps for b, ps in mc["files"].items()}
-            oldd = {
-                int(b): ps for b, ps in (mc.get("delta_files") or {}).items()
-            }
-            if mode == "delta":
-                files = oldf
-                delta_files = {
-                    b: oldd.get(b, []) + staged_files.get(b, [])
-                    for b in set(oldd) | set(staged_files)
-                }
-                bucket_rows = mc.get("bucket_rows") or {}
-                total_rows = mc["total_rows"]
-                old_dr = {
-                    k: int(v) for k, v in (mc.get("delta_rows") or {}).items()
-                }
-                delta_rows = {
-                    str(b): old_dr.get(str(b), 0) + rows_by_bucket.get(str(b), 0)
-                    for b in set(int(k) for k in old_dr) | set(touched)
-                }
-            else:
-                # untouched buckets keep the base manifest's files; touched
-                # swap to staged and their deltas (now folded in) are dropped
-                files = dict(oldf)
-                for b in touched:
-                    files[b] = staged_files.get(b, [])
-                delta_files = {
-                    b: ps for b, ps in oldd.items() if b not in touched
-                }
-                bucket_rows = {
-                    **{
-                        str(b): r
-                        for b, r in (mc.get("bucket_rows") or {}).items()
-                        if int(b) not in touched
-                    },
-                    **rows_by_bucket,
-                }
-                total_rows = (
-                    mc["total_rows"] - self._rows_in(mc, touched) + staged_rows
-                )
-                delta_rows = {
-                    k: int(v)
-                    for k, v in (mc.get("delta_rows") or {}).items()
-                    if int(k) not in touched
-                }
-            applied_c, ranges_c = _fold_applied(
-                mc["applied_epochs"] + [epoch_key],
-                mc.get("applied_ranges") or {},
-                self.max_epoch_entries,
-            )
-            return {
-                "version": mc["version"] + 1,
-                "parent": mc["version"],
-                "epoch_id": epoch_key,
-                "schema": schema_c.jsonValue(),
-                # layout comes from the BASE manifest, not merge-start locals:
-                # the retry loop guarantees they agree (a layout change redoes
-                # the merge), and taking them from mc makes that invariant
-                # structural rather than assumed
-                "key_cols": mc["key_cols"],
-                "n_buckets": mc["n_buckets"],
-                "tenant_id": mc.get("tenant_id"),
-                "files": {str(b): p for b, p in files.items()},
-                "delta_files": {str(b): p for b, p in delta_files.items() if p},
-                "file_stats": self._fold_stats(
-                    mc, files, delta_files, staged_stats
-                ),
-                "stats_cols": mc.get("stats_cols") or [],
-                "bloom_filter_cols": mc.get("bloom_filter_cols") or [],
-                "constraints": mc.get("constraints") or {},
-                # clustering markers: a delta commit appends side files and
-                # leaves every base file untouched, so the base clustering
-                # survives and the claim carries forward; a CoW commit
-                # rewrites its touched buckets UNSORTED, so the claim is
-                # dropped (re-establish with compact/rebucket — same decay-
-                # then-reoptimize lifecycle as Delta OPTIMIZE / Iceberg
-                # sort orders under ongoing writes)
-                "sorted_by": (
-                    list(mc.get("sorted_by") or []) if mode == "delta" else []
-                ),
-                "zordered_by": (
-                    list(mc.get("zordered_by") or []) if mode == "delta" else []
-                ),
-                # metadata-only schema history: untouched buckets keep files
-                # written under historical names, so both carry forward on
-                # every ingest commit (only a provably-full rewrite clears
-                # them — see compact/rebucket)
-                "renamed_cols": mc.get("renamed_cols") or {},
-                "dropped_cols": mc.get("dropped_cols") or [],
-                "bucket_rows": bucket_rows,
-                "applied_epochs": applied_c,
-                "applied_ranges": ranges_c,
-                "added_cols": added_c,
-                "total_rows": total_rows,  # base rows; MOR live count needs read()
-                "delta_rows": delta_rows,
-                "delta_rows_total": sum(delta_rows.values()),
-                "committed_at": time.time(),
-            }
+        # ---- publish (optimistic concurrency: build on the manifest the
+        # merge read; on a lost race, rebuild on the winner's)
+        attempts = 0
 
-        mc = m
-        for attempt in range(max(1, retries)):
-            if attempt:
-                mc = self.manifest()  # re-read the winner's manifest
+        def build(mc: dict[str, Any]) -> dict[str, Any]:
+            nonlocal attempts
+            attempts += 1
+            if attempts > 1:
                 if _epoch_applied(mc, epoch_key):
                     # another writer (a racing retry of the same stream)
                     # already committed THIS epoch — exactly-once holds
-                    return {
-                        "status": "Skipped",
-                        "epoch_id": epoch_id,
-                        "version": mc["version"],
-                        "reason": "epoch committed by concurrent writer",
-                        "duration_s": time.monotonic() - t0,
-                    }
-                stale = (
-                    mc["n_buckets"] != n_buckets
-                    or mc["key_cols"] != key_cols
-                    # a constraint-set change (the winner was
-                    # add_constraint/drop_constraint) invalidates the staged
-                    # ENFORCEMENT, not the bytes: this batch was validated
-                    # against the constraints as of m, and publishing it
-                    # under the winner's stricter set would commit unchecked
-                    # rows — redo the merge so the staging observation
-                    # re-validates against the fresh manifest
-                    or (mc.get("constraints") or {}) != (m.get("constraints") or {})
-                )
-                # a layout change (the winner was rebucket()) invalidates the
-                # staged files in EVERY mode: they are hashed under the OLD
-                # bucket count, and appending them (delta) or republishing
-                # the old layout (CoW _assemble) would silently revert the
-                # rebucket and mis-bucket data — point-lookup pruning would
-                # then skip buckets that hold the key.  Redo the whole merge
-                # against the fresh manifest (staged dirs orphan → vacuumed).
-                if not stale and mode != "delta":
-                    # our merged rewrite folded the touched buckets' state
-                    # AS OF m; if the winner changed any of them the staged
-                    # output is stale — same recovery
-                    od = m.get("delta_files") or {}
-                    nd = mc.get("delta_files") or {}
-                    stale = any(
+                    return _skipped_epoch(
+                        mc, epoch_id, "epoch committed by concurrent writer", t0
+                    )
+                # a layout or constraint change invalidates the staged
+                # files in every mode (see _layout_moved); in CoW mode so
+                # does any change to a touched bucket — our rewrite folded
+                # its state AS OF m.  Redo the whole merge against the
+                # fresh manifest (staged dirs orphan → vacuumed).  A
+                # same-layout delta rebase is safe: delta commits only
+                # append per-bucket file lists, they never read target state
+                od = m.get("delta_files") or {}
+                nd = mc.get("delta_files") or {}
+                if self._layout_moved(m, mc) or (
+                    mode != "delta"
+                    and any(
                         mc["files"].get(str(b)) != m["files"].get(str(b))
                         or nd.get(str(b)) != od.get(str(b))
                         for b in touched
                     )
-                if stale:
+                ):
                     return self.merge(
                         changes,
                         epoch_id,
@@ -2268,27 +2178,60 @@ class ManifestTable:
                         epoch_scope=epoch_scope,
                         before_publish=before_publish,
                         mode=mode,
-                        retries=retries - attempt,
+                        retries=retries - attempts + 1,
                     )
-                # same-layout delta rebase is safe: delta commits only append
-                # per-bucket file lists, they never read target state
-            new_manifest = _assemble(mc)
-            if before_publish is not None:
-                # test/chaos hook: crash after staging, before the commit
-                # point — the staged dir stays unreferenced; replay re-runs
-                before_publish(new_manifest)
-            try:
-                self._publish(new_manifest)
-                break
-            except ManifestConflict:
-                continue
-        else:
-            raise ManifestConflict(
-                f"epoch {epoch_id}: lost the manifest race {retries} times — "
-                f"giving up (staged files remain unreferenced; safe to retry)"
+            if mode == "delta":
+                return self._append_deltas(
+                    mc, epoch_key, payload_fields,
+                    staged_files, rows_by_bucket, staged_stats,
+                )
+            # untouched buckets keep the base manifest's files; touched
+            # swap to staged and their deltas (now folded in) are dropped
+            files = {int(b): ps for b, ps in mc["files"].items()}
+            files.update({b: staged_files.get(b, []) for b in touched})
+            delta_files = {
+                int(b): ps
+                for b, ps in (mc.get("delta_files") or {}).items()
+                if ps and int(b) not in touched
+            }
+            delta_rows = {
+                k: int(v)
+                for k, v in (mc.get("delta_rows") or {}).items()
+                if int(k) not in touched
+            }
+            return self._epoch_commit(
+                mc, epoch_key, payload_fields,
+                files={str(b): p for b, p in files.items()},
+                delta_files={str(b): p for b, p in delta_files.items()},
+                file_stats=self._fold_stats(
+                    mc, files, delta_files, staged_stats
+                ),
+                # a CoW commit rewrites its touched buckets UNSORTED, so the
+                # clustering claims are dropped (re-establish with compact/
+                # rebucket — same decay-then-reoptimize lifecycle as Delta
+                # OPTIMIZE / Iceberg sort orders under ongoing writes)
+                sorted_by=[],
+                zordered_by=[],
+                bucket_rows={
+                    **{
+                        str(b): r
+                        for b, r in (mc.get("bucket_rows") or {}).items()
+                        if int(b) not in touched
+                    },
+                    **rows_by_bucket,
+                },
+                total_rows=(
+                    mc["total_rows"] - self._rows_in(mc, touched) + staged_rows
+                ),
+                delta_rows=delta_rows,
+                delta_rows_total=sum(delta_rows.values()),
             )
-        version = new_manifest["version"]
-        added_cols = new_manifest["added_cols"]
+
+        new_manifest = self._transact(
+            build, base=m, retries=retries, before_publish=before_publish
+        )
+        if "status" in new_manifest:
+            return new_manifest
         if mode != "delta" and merge_path != "initial":
             # the intermediate change-stage files were folded into merged/
             # and are never referenced by any manifest; drop them now rather
@@ -2298,13 +2241,13 @@ class ManifestTable:
         return {
             "status": "Success",
             "epoch_id": epoch_id,
-            "version": version,
+            "version": new_manifest["version"],
             "merge_path": merge_path,
             "touched_buckets": touched,
             "staged_rows": staged_rows,
             "n_change_keys": n_change_keys,
             "rows_by_bucket": {int(b): n for b, n in rows_by_bucket.items()},
-            "added_cols": added_cols,
+            "added_cols": new_manifest["added_cols"],
             "duration_s": time.monotonic() - t0,
         }
 
@@ -2368,13 +2311,7 @@ class ManifestTable:
         m = self.manifest()
         epoch_key = f"{epoch_scope}:{epoch_id}"
         if _epoch_applied(m, epoch_key):
-            return {
-                "status": "Skipped",
-                "epoch_id": epoch_id,
-                "version": m["version"],
-                "reason": "epoch already applied",
-                "duration_s": time.monotonic() - t0,
-            }
+            return _skipped_epoch(m, epoch_id, "epoch already applied", t0)
         if m.get("constraints"):
             raise ValueError(
                 f"table has CHECK constraints "
@@ -2385,7 +2322,6 @@ class ManifestTable:
                 f"Spark-validated paths) instead"
             )
         n_buckets = m["n_buckets"]
-        key_cols = list(m["key_cols"])
         if expected_n_buckets is not None and expected_n_buckets != n_buckets:
             raise RuntimeError(
                 f"epoch {epoch_id}: files were bucketed for "
@@ -2403,94 +2339,20 @@ class ManifestTable:
                 f"staged bucket ids {bad} outside [0, {n_buckets})"
             )
         have = {f.name for f in payload_schema.fields}
-        missing = [c for c in key_cols + ["ts"] if c not in have]
+        missing = [c for c in list(m["key_cols"]) + ["ts"] if c not in have]
         if missing:
             raise ValueError(
                 f"payload schema is missing required columns {missing} "
                 f"(key columns + the 'ts' version column)"
             )
-        payload_fields = list(payload_schema.fields)
-        staged_rows_total = sum(int(v) for v in rows_by_bucket.values())
 
-        def _assemble(mc: dict[str, Any]) -> dict[str, Any]:
-            schema_c, added_c = self._evolve_schema(
-                T.StructType.fromJson(mc["schema"]),
-                T.StructType(payload_fields),
-                tombstoned=self._tombstoned_names(mc),
-            )
-            oldf = {int(b): ps for b, ps in mc["files"].items()}
-            oldd = {
-                int(b): ps for b, ps in (mc.get("delta_files") or {}).items()
-            }
-            delta_files = {
-                b: oldd.get(b, []) + staged_sorted.get(b, [])
-                for b in set(oldd) | set(staged_sorted)
-            }
-            old_dr = {
-                k: int(v) for k, v in (mc.get("delta_rows") or {}).items()
-            }
-            delta_rows = {
-                str(b): old_dr.get(str(b), 0)
-                + int(rows_by_bucket.get(str(b), 0))
-                for b in set(int(k) for k in old_dr) | set(staged_sorted)
-            }
-            applied_c, ranges_c = _fold_applied(
-                mc["applied_epochs"] + [epoch_key],
-                mc.get("applied_ranges") or {},
-                self.max_epoch_entries,
-            )
-            return {
-                "version": mc["version"] + 1,
-                "parent": mc["version"],
-                "epoch_id": epoch_key,
-                "schema": schema_c.jsonValue(),
-                "key_cols": mc["key_cols"],
-                "n_buckets": mc["n_buckets"],
-                "tenant_id": mc.get("tenant_id"),
-                "files": {str(b): p for b, p in oldf.items()},
-                "delta_files": {
-                    str(b): p for b, p in delta_files.items() if p
-                },
-                "file_stats": self._fold_stats(
-                    mc, oldf, delta_files, staged_stats
-                ),
-                "stats_cols": mc.get("stats_cols") or [],
-                "bloom_filter_cols": mc.get("bloom_filter_cols") or [],
-                "constraints": mc.get("constraints") or {},
-                # a delta append leaves every base file untouched, so the
-                # base clustering claim carries forward (same rule as
-                # merge's delta branch)
-                "sorted_by": list(mc.get("sorted_by") or []),
-                "zordered_by": list(mc.get("zordered_by") or []),
-                "renamed_cols": mc.get("renamed_cols") or {},
-                "dropped_cols": mc.get("dropped_cols") or [],
-                "bucket_rows": mc.get("bucket_rows") or {},
-                "applied_epochs": applied_c,
-                "applied_ranges": ranges_c,
-                "added_cols": added_c,
-                "total_rows": mc["total_rows"],
-                "delta_rows": delta_rows,
-                "delta_rows_total": sum(delta_rows.values()),
-                "committed_at": time.time(),
-            }
-
-        mc = m
-        for attempt in range(max(1, retries)):
-            if attempt:
-                mc = self.manifest()
+        def build(mc: dict[str, Any]) -> dict[str, Any]:
+            if mc["version"] != m["version"]:  # rebasing onto a winner
                 if _epoch_applied(mc, epoch_key):
-                    return {
-                        "status": "Skipped",
-                        "epoch_id": epoch_id,
-                        "version": mc["version"],
-                        "reason": "epoch committed by concurrent writer",
-                        "duration_s": time.monotonic() - t0,
-                    }
-                if (
-                    mc["n_buckets"] != n_buckets
-                    or list(mc["key_cols"]) != key_cols
-                    or (mc.get("constraints") or {})
-                ):
+                    return _skipped_epoch(
+                        mc, epoch_id, "epoch committed by concurrent writer", t0
+                    )
+                if self._layout_moved(m, mc):
                     raise RuntimeError(
                         f"epoch {epoch_id}: lost the manifest race to a "
                         f"bucket-layout / key / constraint change — the "
@@ -2499,26 +2361,102 @@ class ManifestTable:
                         f"restage them; restage against the current table "
                         f"(orphans are vacuumed)"
                     )
-            new_manifest = _assemble(mc)
-            try:
-                self._publish(new_manifest)
-                break
-            except ManifestConflict:
-                continue
-        else:
-            raise ManifestConflict(
-                f"epoch {epoch_id}: lost the manifest race {retries} times — "
-                f"giving up (staged files remain unreferenced; safe to retry)"
+            return self._append_deltas(
+                mc, epoch_key, list(payload_schema.fields),
+                staged_sorted, rows_by_bucket, staged_stats,
             )
+
+        new_manifest = self._transact(build, base=m, retries=retries)
+        if "status" in new_manifest:
+            return new_manifest
         return {
             "status": "Success",
             "epoch_id": epoch_id,
             "version": new_manifest["version"],
-            "staged_rows": staged_rows_total,
+            "staged_rows": sum(int(v) for v in rows_by_bucket.values()),
             "touched_buckets": sorted(staged_sorted),
             "added_cols": new_manifest["added_cols"],
             "duration_s": time.monotonic() - t0,
         }
+
+    @staticmethod
+    def _layout_moved(m: dict[str, Any], mc: dict[str, Any]) -> bool:
+        """Whether race winner ``mc`` changed what a batch staged against
+        ``m`` relied on.  A bucket-count or key change (``rebucket``)
+        leaves the staged files hashed under the OLD layout: appending
+        them or republishing the old layout would mis-bucket data, and
+        point-lookup pruning would then skip buckets that hold the key.
+        A constraint change leaves them validated against the wrong
+        CHECK set."""
+        return (
+            mc["n_buckets"] != m["n_buckets"]
+            or list(mc["key_cols"]) != list(m["key_cols"])
+            or (mc.get("constraints") or {}) != (m.get("constraints") or {})
+        )
+
+    def _epoch_commit(
+        self,
+        mc: dict[str, Any],
+        epoch_key: str,
+        payload_fields: list[T.StructField],
+        **changed,
+    ) -> dict[str, Any]:
+        """An exactly-once epoch's commit on base ``mc``: schema evolution
+        of the payload re-derived against ``mc`` (a concurrent writer may
+        have added columns; additive union + read-through nulls keep both
+        sides' files readable), the epoch added to the ledger, and
+        ``changed`` on top."""
+        schema, added = self._evolve_schema(
+            T.StructType.fromJson(mc["schema"]),
+            T.StructType(payload_fields),
+            tombstoned=self._tombstoned_names(mc),
+        )
+        applied, ranges = _fold_applied(
+            mc["applied_epochs"] + [epoch_key],
+            mc.get("applied_ranges") or {},
+            self.max_epoch_entries,
+        )
+        return self._next(
+            mc,
+            epoch_key,
+            schema=schema.jsonValue(),
+            applied_epochs=applied,
+            applied_ranges=ranges,
+            added_cols=added,
+            **changed,
+        )
+
+    def _append_deltas(
+        self,
+        mc: dict[str, Any],
+        epoch_key: str,
+        payload_fields: list[T.StructField],
+        staged: dict[int, list[str]],
+        rows_by_bucket: dict[str, int],
+        staged_stats: dict[str, dict],
+    ) -> dict[str, Any]:
+        """A delta-append epoch's commit on base ``mc`` (``merge`` in
+        delta mode and ``commit_delta_files``): each bucket's bucket-pure
+        ``staged`` files join its delta list.  Base files are untouched,
+        so base row counts and the base clustering claims carry."""
+        old = {int(b): ps for b, ps in (mc.get("delta_files") or {}).items()}
+        delta_files = {
+            b: old.get(b, []) + staged.get(b, []) for b in set(old) | set(staged)
+        }
+        old_rows = {int(b): int(n) for b, n in (mc.get("delta_rows") or {}).items()}
+        delta_rows = {
+            str(b): old_rows.get(b, 0) + int(rows_by_bucket.get(str(b), 0))
+            for b in set(old_rows) | set(staged)
+        }
+        return self._epoch_commit(
+            mc, epoch_key, payload_fields,
+            delta_files={str(b): ps for b, ps in delta_files.items() if ps},
+            file_stats=self._fold_stats(
+                mc, mc["files"], delta_files, staged_stats
+            ),
+            delta_rows=delta_rows,
+            delta_rows_total=sum(delta_rows.values()),
+        )
 
     def _scan_staging(
         self, stage_rel: str, buckets: list[int] | None = None
@@ -2781,9 +2719,11 @@ class ManifestTable:
                     T.TimestampType(),
                 )
             )
+            # (a NULL-ts tombstone is never provably older than W: it stays)
             merged = merged.filter(
                 ~(
                     F.coalesce(F.col("_deleted"), F.lit(False))
+                    & F.col("ts").isNotNull()
                     & (F.col("ts") < w)
                 )
             )
@@ -2855,26 +2795,14 @@ class ManifestTable:
         full_rewrite = not delta_files and all(
             int(b) in cset for b, ps in old_files.items() if ps
         )
-        new_manifest = {
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"compact:{version}",
-            "schema": m["schema"],
-            "key_cols": key_cols,
-            "n_buckets": m["n_buckets"],
-            "tenant_id": m.get("tenant_id"),
+        changed = {
             "files": {str(b): p for b, p in files.items()},
             "delta_files": {str(b): p for b, p in delta_files.items()},
             "file_stats": self._fold_stats(m, files, delta_files, staged_stats),
-            "stats_cols": m.get("stats_cols") or [],
-            "bloom_filter_cols": m.get("bloom_filter_cols") or [],
-            "constraints": m.get("constraints") or {},
             # informational: the clustering applied by THIS rewrite (pruning
             # reads file_stats directly and needs no ordering guarantee)
             "sorted_by": list(sort_by or []),
             "zordered_by": list(zorder_by or []),
-            "renamed_cols": {} if full_rewrite else (m.get("renamed_cols") or {}),
-            "dropped_cols": [] if full_rewrite else (m.get("dropped_cols") or []),
             "bucket_rows": {
                 **{
                     str(b): r
@@ -2883,14 +2811,12 @@ class ManifestTable:
                 },
                 **rows_by_bucket,
             },
-            "applied_epochs": m["applied_epochs"],
-            "applied_ranges": m.get("applied_ranges") or {},
-            "added_cols": [],
             "total_rows": m["total_rows"] - self._rows_in(m, cand) + staged_rows,
             "delta_rows": delta_rows,
             "delta_rows_total": sum(delta_rows.values()),
-            "committed_at": time.time(),
         }
+        if full_rewrite:
+            changed.update(renamed_cols={}, dropped_cols=[])
         if purge_tombstones_before is not None:
             # the purge ENFORCES its own contract: advance the table's
             # watermark (monotone max with any retention watermark already
@@ -2903,30 +2829,19 @@ class ManifestTable:
             )
             old = m.get("retention_ts")
             if old is None or _stat_from_json(old) < w:
-                new_manifest["retention_ts"] = _stat_to_json(w)
-            else:
-                new_manifest["retention_ts"] = old
-        if before_publish is not None:
-            before_publish(new_manifest)
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            # compaction is pure maintenance: losing the race to an ingest
-            # commit just means the fold re-runs at the next cadence — never
-            # block or retry against the ingest path
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-                "duration_s": time.monotonic() - t0,
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "compacted_buckets": cand,
-            "staged_rows": staged_rows,
-            "duration_s": time.monotonic() - t0,
-        }
+                changed["retention_ts"] = _stat_to_json(w)
+        # compaction is pure maintenance: losing the race to an ingest
+        # commit just means the fold re-runs at the next cadence
+        res = self._commit_or_skip(
+            m,
+            f"compact:{version}",
+            changed,
+            before_publish=before_publish,
+            compacted_buckets=cand,
+            staged_rows=staged_rows,
+        )
+        res["duration_s"] = time.monotonic() - t0
+        return res
 
     def _merge_broadcast(
         self,
@@ -3187,53 +3102,34 @@ class ManifestTable:
                 f"rebucket audit failed: observed {int(obs.get['rows'])} vs "
                 f"staged {staged_rows}"
             )
-        new_manifest = {
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"rebucket:{version}",
-            "schema": m["schema"],
-            "key_cols": key_cols,
-            "n_buckets": n_buckets,
-            "tenant_id": m.get("tenant_id"),
-            "files": {str(b): p for b, p in staged_files.items()},
-            "delta_files": {},
-            "file_stats": self._fold_stats(m, staged_files, {}, staged_stats),
-            "stats_cols": m.get("stats_cols") or [],
-            "bloom_filter_cols": m.get("bloom_filter_cols") or [],
-            "constraints": m.get("constraints") or {},
-            "sorted_by": list(sort_by or []),
-            "zordered_by": list(zorder_by or []),
-            # a rebucket rewrites EVERY live file under the current names,
-            # so rename shadows / drop tombstones physicalize and clear
-            "renamed_cols": {},
-            "dropped_cols": [],
-            "bucket_rows": rows_by_bucket,
-            "applied_epochs": m["applied_epochs"],
-            "applied_ranges": m.get("applied_ranges") or {},
-            "added_cols": [],
-            "total_rows": staged_rows,
-            "delta_rows": {},
-            "delta_rows_total": 0,
-            "committed_at": time.time(),
-        }
-        if before_publish is not None:
-            before_publish(new_manifest)
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-                "duration_s": time.monotonic() - t0,
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "n_buckets": n_buckets,
-            "staged_rows": staged_rows,
-            "duration_s": time.monotonic() - t0,
-        }
+        res = self._commit_or_skip(
+            m,
+            f"rebucket:{version}",
+            {
+                "n_buckets": n_buckets,
+                "files": {str(b): p for b, p in staged_files.items()},
+                "delta_files": {},
+                "file_stats": self._fold_stats(
+                    m, staged_files, {}, staged_stats
+                ),
+                "sorted_by": list(sort_by or []),
+                "zordered_by": list(zorder_by or []),
+                # a rebucket rewrites EVERY live file under the current
+                # names, so rename shadows / drop tombstones physicalize
+                # and clear
+                "renamed_cols": {},
+                "dropped_cols": [],
+                "bucket_rows": rows_by_bucket,
+                "total_rows": staged_rows,
+                "delta_rows": {},
+                "delta_rows_total": 0,
+            },
+            before_publish=before_publish,
+            n_buckets=n_buckets,
+            staged_rows=staged_rows,
+        )
+        res["duration_s"] = time.monotonic() - t0
+        return res
 
     # ---------- maintenance ----------
 
@@ -3659,21 +3555,18 @@ class ManifestTable:
             )
 
         drop_key = f"retdel:{epoch_id}"
-        result: dict[str, Any] = {
-            "status": "Success",
-            "epoch_id": epoch_id,
-            "dropped_files": 0,
-            "dropped_rows": 0,
-        }
-        for attempt in range(5):
-            m = self.manifest()
+
+        def build(m: dict[str, Any]) -> dict[str, Any]:
             if _epoch_applied(m, drop_key):
-                result["drop_status"] = "Skipped"
-                break
+                return {"status": "Skipped"}
             old_ret = m.get("retention_ts")
             old_cut = _stat_from_json(old_ret) if old_ret is not None else None
             eff = cutoff if old_cut is None else max(old_cut, cutoff)
             dropped = self._droppable_before(m, eff)
+            if not dropped and old_cut is not None and eff <= old_cut:
+                # nothing to drop and the watermark already covers the
+                # cutoff: no commit needed, go straight to the residual
+                return {"status": "NoChange"}
             stats = dict(m.get("file_stats") or {})
             bucket_rows = {
                 str(b): int(n)
@@ -3686,46 +3579,31 @@ class ManifestTable:
                 stats.pop(p, None)
                 bucket_rows[b] = max(0, bucket_rows.get(b, 0) - rows)
                 n_dropped_rows += rows
-            if not dropped and old_cut is not None and eff <= old_cut:
-                # nothing to drop and the watermark already covers the
-                # cutoff: no commit needed, go straight to the residual
-                result["drop_status"] = "NoChange"
-                break
-            applied_c, ranges_c = _fold_applied(
-                m["applied_epochs"] + [drop_key],
-                m.get("applied_ranges") or {},
-                self.max_epoch_entries,
+            return self._epoch_commit(
+                m,
+                drop_key,
+                [],
+                files=files,
+                file_stats=stats,
+                bucket_rows=bucket_rows,
+                total_rows=max(0, int(m["total_rows"]) - n_dropped_rows),
+                retention_ts=_stat_to_json(eff),
+                retdel_dropped=sorted(p for _, p, _ in dropped),
+                retdel_rows=n_dropped_rows,
             )
-            new_manifest = {
-                **m,
-                "version": m["version"] + 1,
-                "parent": m["version"],
-                "epoch_id": drop_key,
-                "files": files,
-                "file_stats": stats,
-                "bucket_rows": bucket_rows,
-                "total_rows": max(0, int(m["total_rows"]) - n_dropped_rows),
-                "applied_epochs": applied_c,
-                "applied_ranges": ranges_c,
-                "added_cols": [],
-                "retention_ts": _stat_to_json(eff),
-                "retdel_dropped": sorted(p for _, p, _ in dropped),
-                "retdel_rows": n_dropped_rows,
-                "committed_at": time.time(),
-            }
-            try:
-                self._publish(new_manifest)
-            except ManifestConflict:
-                continue  # re-read and recompute against the winner
-            result["dropped_files"] = len(dropped)
-            result["dropped_rows"] = n_dropped_rows
-            result["version"] = new_manifest["version"]
-            break
+
+        # a lost race re-reads and RECOMPUTES the drop set on the winner
+        drop = self._transact(build, base=m, retries=5)
+        result: dict[str, Any] = {
+            "status": "Success",
+            "epoch_id": epoch_id,
+            "dropped_files": len(drop.get("retdel_dropped", [])),
+            "dropped_rows": drop.get("retdel_rows", 0),
+        }
+        if "status" in drop:
+            result["drop_status"] = drop["status"]
         else:
-            raise ManifestConflict(
-                f"retention_delete epoch {epoch_id}: lost the manifest "
-                f"race 5 times — safe to retry"
-            )
+            result["version"] = drop["version"]
 
         # residual tombstone pass over whatever live pre-cutoff rows remain
         # (boundary files, buckets that had deltas) — its own exactly-once
@@ -4399,29 +4277,12 @@ class ManifestTable:
                 "reason": "stats_cols unchanged",
                 "version": m["version"],
             }
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"set-stats:{version}",
-            "stats_cols": list(stats_cols),
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "stats_cols": list(stats_cols),
-        }
+        return self._commit_or_skip(
+            m,
+            f"set-stats:{m['version'] + 1}",
+            {"stats_cols": list(stats_cols)},
+            stats_cols=list(stats_cols),
+        )
 
     # known maintenance-policy property keys (the `maintain.py auto`
     # autopilot reads exactly these; see set_properties)
@@ -4506,8 +4367,8 @@ class ManifestTable:
         """Merge-update table properties — a METADATA-ONLY commit (Iceberg
         ``ALTER TABLE ... SET TBLPROPERTIES`` / ``UNSET`` analogue).
         ``None`` deletes a key; values are stored as strings.  Properties
-        are CONFIG, carried forward through every subsequent commit at the
-        ``_publish`` chokepoint and deliberately NOT reverted by
+        are CONFIG, carried forward by every subsequent commit (each is
+        built from its parent, see ``_next``) and deliberately NOT reverted by
         ``rollback_to`` (rolling back data must not silently roll back
         retention policy).
 
@@ -4534,25 +4395,12 @@ class ManifestTable:
                 "reason": "properties unchanged",
                 "version": m["version"],
             }
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"set-properties:{version}",
-            "properties": cur,
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {"status": "Success", "version": version, "properties": cur}
+        return self._commit_or_skip(
+            m,
+            f"set-properties:{m['version'] + 1}",
+            {"properties": cur},
+            properties=cur,
+        )
 
     def auto_maintain(self, dry_run: bool = False) -> dict[str, Any]:
         """One-call maintenance autopilot driven by the table's OWN
@@ -4656,29 +4504,12 @@ class ManifestTable:
                 "reason": "bloom_filter_cols unchanged",
                 "version": m["version"],
             }
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"set-bloom:{version}",
-            "bloom_filter_cols": list(cols),
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "bloom_filter_cols": list(cols),
-        }
+        return self._commit_or_skip(
+            m,
+            f"set-bloom:{m['version'] + 1}",
+            {"bloom_filter_cols": list(cols)},
+            bloom_filter_cols=list(cols),
+        )
 
     # ---------- CHECK constraints (write-time data quality contracts) ----------
 
@@ -4817,25 +4648,12 @@ class ManifestTable:
                     f"CHECK ({expr}) — clean the data first "
                     f"(e.g. delete_where/update_where), then re-add"
                 )
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"add-constraint:{version}",
-            "constraints": {**cons, name: expr},
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {"status": "Success", "version": version, "name": name}
+        return self._commit_or_skip(
+            m,
+            f"add-constraint:{m['version'] + 1}",
+            {"constraints": {**cons, name: expr}},
+            name=name,
+        )
 
     def drop_constraint(self, name: str) -> dict[str, Any]:
         """``ALTER TABLE DROP CONSTRAINT`` — metadata-only commit."""
@@ -4849,25 +4667,12 @@ class ManifestTable:
                 "version": m["version"],
             }
         cons.pop(name)
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"drop-constraint:{version}",
-            "constraints": cons,
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {"status": "Success", "version": version, "name": name}
+        return self._commit_or_skip(
+            m,
+            f"drop-constraint:{m['version'] + 1}",
+            {"constraints": cons},
+            name=name,
+        )
 
     def add_column(
         self, name: str, dtype: T.DataType | str
@@ -4905,32 +4710,18 @@ class ManifestTable:
             )
         if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             raise ValueError(f"invalid column name {name!r}")
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"add-column:{name}",
-            "schema": T.StructType(
-                list(schema.fields) + [T.StructField(name, dtype, True)]
-            ).jsonValue(),
-            "added_cols": [name],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "name": name,
-            "dtype": dtype.simpleString(),
-        }
+        return self._commit_or_skip(
+            m,
+            f"add-column:{name}",
+            {
+                "schema": T.StructType(
+                    list(schema.fields) + [T.StructField(name, dtype, True)]
+                ).jsonValue(),
+                "added_cols": [name],
+            },
+            name=name,
+            dtype=dtype.simpleString(),
+        )
 
     def widen_column(
         self, name: str, dtype: T.DataType | str
@@ -4970,37 +4761,22 @@ class ManifestTable:
                 f" only safe promotions within a numeric family are allowed"
                 f" (tinyint→smallint→int→bigint, float→double)"
             )
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"widen-column:{name}",
-            "schema": T.StructType(
-                [
-                    T.StructField(name, dtype, f.nullable)
-                    if f.name == name
-                    else f
-                    for f in schema.fields
-                ]
-            ).jsonValue(),
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "name": name,
-            "dtype": dtype.simpleString(),
-        }
+        return self._commit_or_skip(
+            m,
+            f"widen-column:{name}",
+            {
+                "schema": T.StructType(
+                    [
+                        T.StructField(name, dtype, f.nullable)
+                        if f.name == name
+                        else f
+                        for f in schema.fields
+                    ]
+                ).jsonValue(),
+            },
+            name=name,
+            dtype=dtype.simpleString(),
+        )
 
     def _constraints_referencing(self, col: str) -> list[str]:
         """Names of constraints whose expression references ``col`` —
@@ -5094,33 +4870,22 @@ class ManifestTable:
         def sub(c: str) -> str:
             return new if c == old else c
 
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"rename:{old}>{new}",
-            "schema": T.StructType(fields).jsonValue(),
-            "key_cols": [sub(c) for c in m["key_cols"]],
-            "stats_cols": [sub(c) for c in (m.get("stats_cols") or [])],
-            "bloom_filter_cols": [
-                sub(c) for c in (m.get("bloom_filter_cols") or [])
-            ],
-            "sorted_by": [sub(c) for c in (m.get("sorted_by") or [])],
-            "zordered_by": [sub(c) for c in (m.get("zordered_by") or [])],
-            "renamed_cols": ren,
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {"status": "Success", "version": version, "renamed": {old: new}}
+        return self._commit_or_skip(
+            m,
+            f"rename:{old}>{new}",
+            {
+                "schema": T.StructType(fields).jsonValue(),
+                "key_cols": [sub(c) for c in m["key_cols"]],
+                "stats_cols": [sub(c) for c in (m.get("stats_cols") or [])],
+                "bloom_filter_cols": [
+                    sub(c) for c in (m.get("bloom_filter_cols") or [])
+                ],
+                "sorted_by": [sub(c) for c in (m.get("sorted_by") or [])],
+                "zordered_by": [sub(c) for c in (m.get("zordered_by") or [])],
+                "renamed_cols": ren,
+            },
+            renamed={old: new},
+        )
 
     def drop_column(self, name: str) -> dict[str, Any]:
         """``ALTER TABLE DROP COLUMN`` — a METADATA-ONLY commit: the column
@@ -5164,41 +4929,30 @@ class ManifestTable:
         ren = {k: list(v) for k, v in (m.get("renamed_cols") or {}).items()}
         chain = [name] + ren.pop(name, [])
         dropped = list(m.get("dropped_cols") or []) + chain
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"drop-column:{name}",
-            "schema": T.StructType(
-                [f for f in schema.fields if f.name != name]
-            ).jsonValue(),
-            "stats_cols": [
-                c for c in (m.get("stats_cols") or []) if c != name
-            ],
-            "bloom_filter_cols": [
-                c for c in (m.get("bloom_filter_cols") or []) if c != name
-            ],
-            "sorted_by": [
-                c for c in (m.get("sorted_by") or []) if c != name
-            ],
-            "zordered_by": [
-                c for c in (m.get("zordered_by") or []) if c != name
-            ],
-            "renamed_cols": ren,
-            "dropped_cols": dropped,
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {"status": "Success", "version": version, "dropped": name}
+        return self._commit_or_skip(
+            m,
+            f"drop-column:{name}",
+            {
+                "schema": T.StructType(
+                    [f for f in schema.fields if f.name != name]
+                ).jsonValue(),
+                "stats_cols": [
+                    c for c in (m.get("stats_cols") or []) if c != name
+                ],
+                "bloom_filter_cols": [
+                    c for c in (m.get("bloom_filter_cols") or []) if c != name
+                ],
+                "sorted_by": [
+                    c for c in (m.get("sorted_by") or []) if c != name
+                ],
+                "zordered_by": [
+                    c for c in (m.get("zordered_by") or []) if c != name
+                ],
+                "renamed_cols": ren,
+                "dropped_cols": dropped,
+            },
+            dropped=name,
+        )
 
     # ---------- named refs (Iceberg tags analogue) ----------
 
@@ -5348,43 +5102,32 @@ class ManifestTable:
             raise ValueError("rollback_to needs exactly one of version/tag")
         if tag is not None:
             version = self._resolve_tag(tag)
-        cur = self.current_version()
-        if version == cur:
-            return {"status": "NoChange", "version": cur}
-        target = self.manifest(version)  # raises if expired
-        pub = dict(
-            target,
-            version=cur + 1,
-            parent=cur,
-            epoch_id=f"rollback:{version}",
-            committed_at=time.time(),
-        )
-        # table PROPERTIES are config, not snapshot state (Iceberg
-        # semantics): a rollback keeps the current set, it does not revive
-        # the target's
-        pub.pop("properties", None)
-        head = self.manifest()
-        head_props = head.get("properties")
-        if head_props:
-            pub["properties"] = head_props
-        # the retention watermark is MONOTONE config: a rollback to a
-        # version carrying an older (or no) watermark must not regress it —
-        # replica convergence and tombstone GC both argue from "the
-        # upstream never commits a pre-watermark upsert", which only holds
-        # if the watermark never moves backward.  (A target with NO
-        # watermark already inherits the parent's via _commit_manifest;
-        # this handles a target with an older one.)
-        head_ret = head.get("retention_ts")
-        if head_ret is not None:
-            tgt_ret = pub.get("retention_ts")
-            if tgt_ret is None or _stat_from_json(tgt_ret) < _stat_from_json(
-                head_ret
-            ):
-                pub["retention_ts"] = head_ret
-        self._publish(pub)
+
+        def build(head: dict[str, Any]) -> dict[str, Any]:
+            if head["version"] == version:
+                return {"status": "NoChange", "version": version}
+            # the TARGET's snapshot, never the head's: an older target may
+            # lack keys (delta_files) the head has, and those must not
+            # come back.  Table config is the head's (see _TABLE_CONFIG_KEYS)
+            pub = self._next(
+                self.manifest(version),  # raises if expired
+                f"rollback:{version}",
+                version=head["version"] + 1,
+                parent=head["version"],
+            )
+            for k in self._TABLE_CONFIG_KEYS:
+                if k in head:
+                    pub[k] = head[k]
+                else:
+                    pub.pop(k, None)
+            return pub
+
+        pub = self._transact(build)
+        if "status" in pub:
+            return pub
         return {
             "status": "Success",
-            "version": cur + 1,
+            "version": pub["version"],
             "rolled_back_to": version,
         }
 
@@ -5512,26 +5255,27 @@ class ManifestTable:
             self.spark, self.root, storage=self.storage, branch=name
         )
         bh = b.manifest(head)
-        main_head = self.current_version()
-        if main_head != base:
-            raise ManifestConflict(
-                f"cannot fast-forward {name!r}: main is at v{main_head} but "
-                f"the branch forked at v{base} — main advanced since the "
-                f"fork; create a fresh branch off v{main_head} and replay"
+
+        def build(main: dict[str, Any]) -> dict[str, Any]:
+            if main["version"] != base:
+                raise ManifestConflict(
+                    f"cannot fast-forward {name!r}: main is at "
+                    f"v{main['version']} but the branch forked at v{base} — "
+                    f"main advanced since the fork; create a fresh branch "
+                    f"off v{main['version']} and replay"
+                )
+            if head == base:
+                return {"status": "NoChange", "version": base}
+            return self._next(
+                bh, f"publish:{name}", version=base + 1, parent=base
             )
-        if head == base:
-            return {"status": "NoChange", "version": main_head}
-        pub = dict(
-            bh,
-            version=main_head + 1,
-            parent=main_head,
-            epoch_id=f"publish:{name}",
-            committed_at=time.time(),
-        )
-        self._publish(pub)  # lost race → ManifestConflict, nothing published
+
+        pub = self._transact(build)  # lost race → ManifestConflict
+        if "status" in pub:
+            return pub
         return {
             "status": "Success",
-            "version": main_head + 1,
+            "version": pub["version"],
             "branch_head": head,
             "branch_commits": head - base,
         }

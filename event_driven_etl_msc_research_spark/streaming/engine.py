@@ -87,13 +87,15 @@ def _progress_listener(lineage: LineageLog, query_name: str):
                         "durationMs": dict(p.durationMs or {}),
                     }
                 )
-                total_ms = sum((p.durationMs or {}).values())
+                # triggerExecution is the trigger's wall time; the other
+                # durationMs entries are phases inside it
+                trigger_ms = (p.durationMs or {}).get("triggerExecution", 0)
                 lineage.record_stage(
                     p.batchId,
                     "progress",
                     "Success",
                     detail=detail,
-                    duration_s=total_ms / 1000.0,
+                    duration_s=trigger_ms / 1000.0,
                 )
             except Exception:
                 pass  # metrics must never break the stream

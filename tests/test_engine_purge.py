@@ -142,3 +142,55 @@ def test_auto_purge_on_compaction_cadence(spark, tmp_root):
     )
     eng.table.merge(late, epoch_id=10_001, mode="delta")
     assert eng.read_table().filter(F.col("text") == "zombie").count() == 0
+
+
+def test_purge_keeps_null_ts_tombstones(spark, tmp_root):
+    """A tombstone whose ts is NULL is never provably older than the purge
+    bound, so compact(purge_tombstones_before=) must keep it — otherwise a
+    late NULL-ts upsert with an older lsn (which passes the watermark
+    filter, like every NULL-ts event) resurrects the deleted key."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from event_driven_etl_msc_research_spark.schemas import TRANSCRIPT_SCHEMA
+    from event_driven_etl_msc_research_spark.sinks.manifest import (
+        ManifestTable,
+    )
+
+    schema = T.StructType(
+        [T.StructField("op", T.StringType()), T.StructField("lsn", T.LongType())]
+        + [T.StructField(f.name, f.dataType, True) for f in TRANSCRIPT_SCHEMA]
+    )
+
+    def batch(rows):
+        pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        pdf["ts"] = pd.to_datetime(pdf["ts"], unit="s", utc=True)
+        return spark.createDataFrame(pdf, schema)
+
+    t = ManifestTable.create(
+        spark, os.path.join(tmp_root, "tbl_null"), TRANSCRIPT_SCHEMA,
+        n_buckets=2,
+    )
+    t.merge(batch([("I", 1, "k", 0, "user", "v1", None, None),
+                   ("I", 2, "j", 0, "user", "old", None, BASE_TS),
+                   ("I", 3, "m", 0, "user", "live", None, BASE_TS)]),
+            0, mode="delta")
+    t.merge(batch([("D", 5, "k", 0, None, None, None, None),
+                   ("D", 6, "j", 0, None, None, None, BASE_TS + 1)]),
+            1, mode="delta")
+    assert t.compact(purge_tombstones_before=BASE_TS + 10_000)["status"] == (
+        "Success"
+    )
+    base = [t._spath(p) for ps in t.manifest()["files"].values() for p in ps]
+    dead = (
+        spark.read.parquet(*base)
+        .filter(F.coalesce(F.col("_deleted"), F.lit(False)))
+        .select("conv_id", "ts")
+        .collect()
+    )
+    # the dated tombstone is purged, the NULL-ts one survives
+    assert [(r["conv_id"], r["ts"]) for r in dead] == [("k", None)]
+
+    t.merge(batch([("U", 3, "k", 0, "user", "zombie", None, None)]),
+            2, mode="delta")
+    assert [r["conv_id"] for r in t.read().collect()] == ["m"]

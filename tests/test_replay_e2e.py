@@ -106,6 +106,38 @@ def test_progress_listener_records_engine_metrics(spark, tmp_root):
     assert total_input == spec.n_events
 
 
+def test_progress_duration_is_trigger_wall_time(spark, tmp_root):
+    """A ``progress`` row's duration is the trigger's own wall time
+    (``triggerExecution``), which already contains every other
+    ``durationMs`` phase.  Summed over the triggers it therefore cannot
+    exceed the replay's wall time."""
+    import json
+    import time
+
+    import pytest
+
+    log_dir = os.path.join(tmp_root, "wal")
+    spec = ChangeStreamSpec(
+        n_events=2_000, n_convs=30, segment_size=500, seed=9, dup_segments=()
+    )
+    generate_change_stream(log_dir, spec)
+    eng = CDCEngine(
+        spark, os.path.join(tmp_root, "table"),
+        change_schema=CHANGE_EVENT_SCHEMA_EVOLVED, n_buckets=4,
+    )
+    t0 = time.monotonic()
+    eng.replay(log_dir, os.path.join(tmp_root, "cp"), max_files_per_trigger=2)
+    wall = time.monotonic() - t0
+
+    lin = eng.lineage.lineage().toPandas()
+    prog = lin[lin["stage"] == "progress"]
+    assert len(prog) >= 2
+    for d, got in zip(prog["detail"], prog["duration_s"]):
+        want = json.loads(d)["durationMs"]["triggerExecution"] / 1000.0
+        assert got == pytest.approx(want)
+    assert prog["duration_s"].sum() <= wall
+
+
 def test_parquet_wal_replay_matches_oracle(spark, tmp_root):
     """The changelog source's parquet segment format (the realistic WAL
     encoding at scale — columnar segments instead of JSONL) replays to the

@@ -5,8 +5,9 @@ this measures the metadata plane only) and replays an identical commit
 sequence twice: once with inline manifests (every commit re-serializes the
 FULL per-bucket file listing + stats) and once with segmented manifests
 (``write.manifest.segment-min-files=0``).  Each commit touches ``k`` random
-buckets, exactly the shape of a delta-mode binlog tail.  Measured per
-variant:
+buckets, exactly the shape of a delta-mode binlog tail, and is built and
+published by the table's own commit path (``ManifestTable._transact``).
+Measured per variant:
 
 * publish bytes/objects actually uploaded per commit (put_if_absent that
   finds the key present uploads nothing — that is the content-address win);
@@ -106,31 +107,25 @@ def run_variant(name: str, props: dict | None, n_buckets: int,
             storage=st, properties=props,
         )
         files, stats = synth_state(n_buckets, files_per_bucket)
-        m = dict(t.manifest())
-        m.update(
-            version=1, parent=0, epoch_id="seed", files=files,
-            file_stats=stats, committed_at=time.time(),
-        )
-        t._publish(m)
+        t._transact(lambda m: t._next(m, "seed", files=files, file_stats=stats))
         st.reset()
 
-        t0 = time.perf_counter()
-        for c in range(commits):
-            m = dict(t.manifest())
-            m["version"] += 1
-            m["parent"] = m["version"] - 1
-            m["epoch_id"] = f"e{c}"
-            m["files"] = dict(m["files"])
-            m["file_stats"] = dict(m["file_stats"])
+        def replace_files(m, c):
+            """Commit ``c``: one file rewritten in each of ``touch`` random
+            buckets, built and published by the engine's commit path."""
+            files, stats = dict(m["files"]), dict(m["file_stats"])
             for b in random.sample(range(n_buckets), touch):
-                ps = list(m["files"][str(b)])
+                ps = list(files[str(b)])
                 old = ps[random.randrange(len(ps))]
                 new = old.replace("part-", f"pt{c:04d}-")
                 ps[ps.index(old)] = new
-                m["files"][str(b)] = ps
-                m["file_stats"][new] = m["file_stats"].pop(old)
-            m["committed_at"] = time.time()
-            t._publish(m)
+                files[str(b)] = ps
+                stats[new] = stats.pop(old)
+            return t._next(m, f"e{c}", files=files, file_stats=stats)
+
+        t0 = time.perf_counter()
+        for c in range(commits):
+            t._transact(lambda m: replace_files(m, c))
         commit_s = time.perf_counter() - t0
         publish = {
             "bytes_per_commit": round(st.put_bytes / commits),
@@ -150,17 +145,11 @@ def run_variant(name: str, props: dict | None, n_buckets: int,
         warm_store.reset()
         writer = ManifestTable(None, root, storage=LocalFSStorage(root))
         for c in range(10):
-            m = dict(writer.manifest())
-            m["version"] += 1
-            m["parent"] = m["version"] - 1
-            m["epoch_id"] = f"w{c}"
-            m["files"] = dict(m["files"])
             b = str(random.randrange(n_buckets))
-            m["files"][b] = list(m["files"][b]) + [
-                f"data/w{c}/_bucket={b}/part-00000-extra.zstd.parquet"
-            ]
-            m["committed_at"] = time.time()
-            writer._publish(m)
+            extra = f"data/w{c}/_bucket={b}/part-00000-extra.zstd.parquet"
+            writer._transact(lambda m: writer._next(
+                m, f"w{c}", files={**m["files"], b: m["files"][b] + [extra]}
+            ))
             tail.manifest()
         return {
             "publish": publish,
